@@ -9,6 +9,7 @@ own `expected_final_state_chunked`.
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -16,28 +17,38 @@ import pyarrow.parquet as pq
 KEY = ["repo", "path"]
 
 
+#: suffix of the file beside a segment that holds `segment_events` of it
+DIGESTS = ".events"
+
+
+def segment_events(path: str) -> pd.DataFrame:
+    """A segment's events with the length and sha256 of each body in place
+    of the body."""
+    df = pq.read_table(path, columns=["op", "seq", "repo", "path", "lang", "content"]).to_pandas()
+    df["clen"] = df["content"].str.len().fillna(0).astype("int64")
+    df["sha"] = [
+        hashlib.sha256(c.encode()).hexdigest() if isinstance(c, str) else None
+        for c in df["content"]
+    ]
+    return df.drop(columns=["content"])
+
+
 class PrefixOracle:
     """Table states after the first k delivered chunks of a change log.
 
     `chunks[i]` lists the segment files of chunk i; a version of the table
-    maps to the number of chunks committed at that version.
+    maps to the number of chunks committed at that version. A segment's
+    events are read from its DIGESTS file when the generator wrote one.
     """
 
     def __init__(self, chunks: list[list[str]]):
         frames = []
         for i, paths in enumerate(chunks):
             for p in paths:
-                t = pq.read_table(p, columns=["op", "seq", "repo", "path", "lang", "content"])
-                df = t.to_pandas()
+                df = pd.read_parquet(p + DIGESTS) if os.path.exists(p + DIGESTS) else segment_events(p)
                 df["chunk"] = i
                 frames.append(df)
-        ev = pd.concat(frames, ignore_index=True)
-        ev["clen"] = ev["content"].str.len().fillna(0).astype("int64")
-        ev["sha"] = [
-            hashlib.sha256(c.encode()).hexdigest() if isinstance(c, str) else None
-            for c in ev["content"]
-        ]
-        self.events = ev.drop(columns=["content"])
+        self.events = pd.concat(frames, ignore_index=True)
         self._cache: dict[int, pd.DataFrame] = {}
 
     def state(self, k: int) -> pd.DataFrame:

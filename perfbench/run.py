@@ -28,7 +28,7 @@ import time
 import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOAD_NAMES = ("bulk_replay", "trickle_upsert", "serve_under_ingest")
+WORKLOAD_NAMES = ("bulk_replay", "serve_under_ingest")
 READ_TYPES = ("point", "range", "scan", "changes", "sql")
 
 END_TO_END = {
@@ -81,6 +81,8 @@ PER_LAYER = {
     "spark.gc_s": "s",
     "spark.tasks": "count",
     "spark.failed_tasks": "count",
+    "streaming.trigger_fixed_s": "s",
+    "streaming.trigger_fixed_share": "ratio",
     "spark.local1_events_per_s": "events/s",
     "spark.local1_scaling_ratio": "ratio",
     "trace.overhead_ratio": "ratio",
@@ -174,6 +176,14 @@ def stop_spark(spark) -> None:
                     pass
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the machine since boot: on a VM, steal is
+    time the hypervisor gave the vCPUs to other guests."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:9]]
+    return v[7], sum(v)
+
+
 # ---------------------------------------------------------------- metrics
 
 
@@ -213,6 +223,14 @@ def details(res, failures: list[str]) -> dict:
         "error_rate": len(failures) / attempted if attempted else None,
         "failures": failures[:20],
     }
+
+
+def fit_intercept(points: list[tuple[float, float]]) -> float:
+    """Least-squares intercept of y over x."""
+    xs, ys = [x for x, _ in points], [y for _, y in points]
+    mx, my = statistics.fmean(xs), statistics.fmean(ys)
+    slope = sum((x - mx) * (y - my) for x, y in points) / sum((x - mx) ** 2 for x in xs)
+    return my - slope * mx
 
 
 def per_layer(tracer, res, session_s: float, spark_delta: dict) -> dict[str, float]:
@@ -302,27 +320,12 @@ def per_layer(tracer, res, session_s: float, spark_delta: dict) -> dict[str, flo
     }
 
 
-def epochs_over_wall(tracer) -> tuple[int, int]:
-    """(epochs checked, epochs whose spans' self times sum above the epoch's
-    wall time). Epochs are streaming triggers and serve epochs."""
-    from perfbench.trace import descendants, self_times
-
-    selfs = self_times(tracer.spans)
-    roots = [s for s in tracer.spans if s.name in ("streaming.trigger", "op.serve_epoch")]
-    bad = 0
-    for r in roots:
-        tree = [r, *descendants(tracer.spans, r.id)]
-        if sum(selfs[s.id] for s in tree) > r.duration + 1e-6:
-            bad += 1
-    return len(roots), bad
-
-
 # ---------------------------------------------------------------- run
 
 
 def run(args, work: str, run_dir: str) -> tuple[dict, dict]:
     from perfbench import workloads as W
-    from perfbench.trace import NullTracer, ProgressListener, Tracer
+    from perfbench.trace import NullTracer, ProgressListener, Tracer, epochs_over_wall
 
     logs, gen_s = W.prepare_inputs(
         args.workload, args.seed, os.path.join(work, "inputs"), traced=bool(args.trace)
@@ -340,20 +343,23 @@ def run(args, work: str, run_dir: str) -> tuple[dict, dict]:
         b = W.Bench(spark, tracer, listener, logs, run_dir, args.seed, args.seconds, args.workload)
         wl = W.WORKLOADS[args.workload]
 
-        t0 = time.perf_counter()
-        wl.warm_up(b)
-        warm_s = time.perf_counter() - t0
-        table_s = []
+        table_s, states = [], []
         for _ in range(W.SETUP_REPEATS):
             t0 = time.perf_counter()
-            state = wl.setup(b)
+            states.append(wl.setup(b))
             table_s.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        wl.warm_up(b, states[0])
+        warm_s = time.perf_counter() - t0
+        state = states[-1]
         setup_s = session_s + warm_s + statistics.median(table_s)
 
         tracer.phase = "measure"
+        ticks0 = cpu_ticks()
         t0 = time.perf_counter()
         res = wl.loop(b, state)
         t1 = time.perf_counter()
+        ticks1 = cpu_ticks()
         if wl.readback:
             W.readback(b, res)
         t2 = time.perf_counter()
@@ -366,6 +372,7 @@ def run(args, work: str, run_dir: str) -> tuple[dict, dict]:
             "cores": n_cores, "gen_s": gen_s, "session_s": session_s,
             "warm_s": warm_s, "table_setup_s": table_s,
             "loop_s": t1 - t0, "readback_s": t2 - t1, "check_s": t3 - t2,
+            "loop_cpu_steal": (ticks1[0] - ticks0[0]) / max(1, ticks1[1] - ticks0[1]),
             **details(res, failures), "end_to_end": metrics,
         }
         attempted = len(res.epoch_latency) + len(res.reads)
@@ -375,13 +382,15 @@ def run(args, work: str, run_dir: str) -> tuple[dict, dict]:
 
         counters1 = tracer.counters()
         tracer.uninstall()
-        tracer.attach_orphans()
+        lost = tracer.attach_orphans()
+        if lost:
+            failures.append(f"{lost} callback-thread spans overlap no streaming trigger")
         layers = per_layer(
             tracer, res, session_s, {k: counters1[k] - counters0[k] for k in counters0}
         )
-        checked, over = epochs_over_wall(tracer)
+        checked, over = epochs_over_wall(tracer.spans, ("streaming.trigger", "op.serve_epoch"))
         if over:
-            failures.append(f"{over}/{checked} epochs: span self times exceed epoch wall")
+            failures.append(f"{len(over)}/{checked} epochs: span self times exceed epoch wall")
 
         # tracing overhead: the same loop again on a fresh set-up, untraced
         b.tracer = NullTracer()
@@ -390,18 +399,27 @@ def run(args, work: str, run_dir: str) -> tuple[dict, dict]:
         untraced = res2.events / res2.ingest_wall
         layers["trace.overhead_ratio"] = metrics["ingest_events_per_s"] / untraced
 
-        # single-thread baseline: bulk_replay's backlog at local[N] (second
-        # drain, the first one warms), then once at local[1]
-        bulk = W.WORKLOADS["bulk_replay"]
+        # single-thread baseline: the first chunk of bulk_replay's log (one
+        # trigger) at local[N], after a warm-up drain, then at local[1]
+        bulk, log = W.WORKLOADS["bulk_replay"], logs["bulk_replay"]
+        chunk = len(log.chunks[0])
+        bulk.run_once(b, log, W.LoopResult(), name="scale-warm", prefix=W.WARM_SEGMENTS)
         probe = W.LoopResult()
-        bulk.run_once(b, logs["bulk_replay"], W.LoopResult(), name="scale-warm")
-        rate_n = bulk.run_once(b, logs["bulk_replay"], probe, name="scale-n")
+        rate_n = bulk.run_once(b, log, probe, name="scale-n", prefix=chunk)
+        # a trigger's fixed cost: the intercept of trigger time over rows,
+        # from that trigger and a drain of one segment
+        one = W.LoopResult()
+        bulk.run_once(b, log, one, name="one-segment", prefix=1)
+        fixed_s = fit_intercept(probe.triggers + one.triggers)
+        layers["streaming.trigger_fixed_s"] = fixed_s
+        # of a one-chunk drain; a full drain has one trigger per chunk too
+        layers["streaming.trigger_fixed_share"] = fixed_s * len(probe.triggers) / probe.drains[0][1]
         spark.streams.removeListener(listener)
         spark.stop()
         spark = b.spark = start_spark(scratch, 1)
         spark.streams.addListener(listener)
         probe1 = W.LoopResult()
-        rate_1 = bulk.run_once(b, logs["bulk_replay"], probe1, name="scale-1")
+        rate_1 = bulk.run_once(b, log, probe1, name="scale-1", prefix=chunk)
         failures += W.check(b, probe) + W.check(b, probe1)
         layers["spark.local1_events_per_s"] = rate_1
         layers["spark.local1_scaling_ratio"] = rate_n / rate_1
@@ -409,7 +427,7 @@ def run(args, work: str, run_dir: str) -> tuple[dict, dict]:
         info.update(
             per_layer=layers, untraced_events_per_s=untraced,
             local_n_events_per_s=rate_n, epochs_checked=checked,
-            epochs_over_wall=over, failures=failures[:20],
+            epochs_over_wall=len(over), failures=failures[:20],
         )
         os.makedirs(os.path.join(work, "traces"), exist_ok=True)
         path = os.path.join(work, "traces", f"{args.workload}-s{args.seed}-{tracer.run_id}.json")

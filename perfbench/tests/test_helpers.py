@@ -12,7 +12,7 @@ import pytest
 
 from perfbench.oracle import PrefixOracle, check_read
 from perfbench.stats import tail_percentile
-from perfbench.trace import Span, descendants, self_times
+from perfbench.trace import Span, Tracer, descendants, epochs_over_wall, self_times
 
 
 # ---------------------------------------------------------------- percentiles
@@ -67,6 +67,39 @@ def test_self_times_of_sequential_tree_sum_to_root_wall():
     st = self_times(spans)
     tree = [spans[0], *descendants(spans, 1)]
     assert sum(st[s.id] for s in tree) == pytest.approx(5.0)
+
+
+def trigger_tree(merge_end):
+    """A listener trigger over [10, 12] and a callback-thread merge span
+    with one lakette child, attached the way the traced run attaches them."""
+    t = Tracer()
+    t.spans = [
+        Span(id=1, name="streaming.trigger", start=10.0, end=12.0, thread="listener"),
+        Span(id=2, name="merge.merge_into", start=10.1, end=merge_end, thread="cb"),
+        Span(id=3, name="lakette.commit_version", start=10.5, end=10.9, parent=2, thread="cb"),
+    ]
+    assert t.attach_orphans() == 0
+    return t.spans
+
+
+def test_epoch_check_passes_a_merge_inside_its_trigger():
+    assert epochs_over_wall(trigger_tree(11.9), ("streaming.trigger",)) == (1, [])
+
+
+def test_epoch_check_fails_a_merge_running_past_its_trigger():
+    # the trigger span keeps the listener's interval: it is not widened
+    spans = trigger_tree(12.5)
+    assert (spans[0].start, spans[0].end) == (10.0, 12.0)
+    assert epochs_over_wall(spans, ("streaming.trigger",)) == (1, [1])
+
+
+def test_attach_orphans_reports_spans_outside_every_trigger():
+    t = Tracer()
+    t.spans = [
+        Span(id=1, name="streaming.trigger", start=10.0, end=12.0, thread="listener"),
+        Span(id=2, name="merge.merge_into", start=13.0, end=14.0, thread="cb"),
+    ]
+    assert t.attach_orphans() == 1 and t.spans[1].parent is None
 
 
 # ---------------------------------------------------------------- output checks

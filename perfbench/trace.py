@@ -9,8 +9,8 @@ unchanged.
 A span is (name, start, end, parent, run id, thread, phase, attrs). Parents
 come from a per-thread stack: `foreachBatch` runs `merge_into` on a Spark
 callback thread, so the streaming epochs nest under their own thread's
-spans, and `attach_orphans` later hangs them under the trigger span whose
-interval holds them.
+spans, and `attach_orphans` later hangs them under the trigger span they
+overlap most.
 """
 
 from __future__ import annotations
@@ -101,6 +101,26 @@ def descendants(spans: list[Span], root: int) -> list[Span]:
             out.append(c)
             todo.append(c.id)
     return out
+
+
+#: Spark reports a trigger's start and duration in whole milliseconds
+TRIGGER_RESOLUTION_S = 0.002
+
+
+def epochs_over_wall(spans: list[Span], roots: tuple[str, ...]) -> tuple[int, list[int]]:
+    """(epochs checked, ids of the epochs whose spans' self times sum to more
+    than the epoch's wall time). An epoch is a span named in `roots`; a
+    streaming trigger's wall time is the listener's interval, so a merge span
+    that runs past its trigger makes the sum exceed it (children are clipped
+    to their parent, their own time is not)."""
+    selfs = self_times(spans)
+    over = []
+    checked = [s for s in spans if s.name in roots]
+    for r in checked:
+        tol = TRIGGER_RESOLUTION_S if r.name == "streaming.trigger" else 1e-6
+        if sum(selfs[s.id] for s in [r, *descendants(spans, r.id)]) > r.duration + tol:
+            over.append(r.id)
+    return len(checked), over
 
 
 class NullTracer:
@@ -235,20 +255,23 @@ class Tracer:
 
     # ------------------------------------------------------------ output
 
-    def attach_orphans(self) -> None:
-        """Hang parentless callback-thread spans under the listener's
-        trigger span whose interval holds them. Spark reports triggers in
-        whole milliseconds, so a trigger is widened by up to 5 ms to cover
-        the spans it holds."""
+    def attach_orphans(self) -> int:
+        """Hang each parentless callback-thread span under the listener's
+        trigger span it overlaps most. Trigger spans keep the interval the
+        listener reported, so `epochs_over_wall` can catch a span that does
+        not fit its trigger. Returns the number of callback-thread spans
+        that overlap no trigger."""
         triggers = [s for s in self.spans if s.name == "streaming.trigger"]
+        lost = 0
         for s in self.spans:
             if s.parent is not None or s.thread in ("listener", "MainThread"):
                 continue
-            for t in triggers:
-                if t.start - 0.005 <= s.start and s.end <= t.end + 0.005:
-                    s.parent = t.id
-                    t.start, t.end = min(t.start, s.start), max(t.end, s.end)
-                    break
+            best = max(triggers, key=lambda t: min(t.end, s.end) - max(t.start, s.start), default=None)
+            if best is None or min(best.end, s.end) <= max(best.start, s.start):
+                lost += 1
+            else:
+                s.parent = best.id
+        return lost
 
     def dump(self, path: str, extra: dict) -> None:
         """Write every span, with its self time, as one JSON document."""

@@ -1,11 +1,7 @@
-"""The three benchmark workloads: each is one closed-loop client thread.
+"""The benchmark workloads: each is one closed-loop client thread.
 
-  bulk_replay         drain a backlog with run_ingest(mode="mor") in a few
-                      large triggers, then compact(); repeated on fresh
-                      tables for the run's seconds
-  trickle_upsert      a preloaded table takes one small segment per trigger
-                      through a running run_ingest(mode="auto",
-                      salt_buckets="auto") query
+  bulk_replay         drain a backlog with run_ingest(mode="mor") in two
+                      large triggers, then compact()
   serve_under_ingest  merge_into(mode="mor") epochs alternating with a
                       seeded mix of reads, and incremental compaction every
                       few epochs
@@ -20,6 +16,7 @@ import dataclasses
 import datetime as dt
 import hashlib
 import json
+import multiprocessing
 import os
 import random
 import shutil
@@ -27,7 +24,7 @@ import time
 import traceback
 from dataclasses import dataclass, field
 
-import pyarrow.parquet as pq
+import pandas as pd
 from pyspark.sql import functions as F
 
 from forklift_spark import changelog
@@ -35,7 +32,7 @@ from forklift_spark.operators import changes, merge
 from forklift_spark.sqlfront import SqlFrontend
 from forklift_spark.streaming import ingest
 
-from .oracle import KEY, PrefixOracle, check_read
+from .oracle import DIGESTS, KEY, PrefixOracle, check_read, segment_events
 
 #: key space and event shape shared by every workload: 50 repos x 200
 #: paths, 20% of events on one hot repo, 2% duplicate delivery, disorder
@@ -49,20 +46,27 @@ BASE_SPEC = dict(
     content_tokens_max=96,
 )
 N_BUCKETS = 8
-#: generated logs kept under the input cache
-CACHE_KEEP = 16
+#: generated logs of one workload kept under the input cache
+CACHE_KEEP = 12
+#: child processes that generate a log's chunks and the generator's oracle
+GEN_WORKERS = 3
 SETUP_REPEATS = 3
 #: the seeded read mix of one round
 READ_ROUND = ("point", "range", "scan", "changes", "sql")
 #: how many versions back a `changes_since` read starts
 CHANGES_SPAN = 3
-BULK = dict(n_events=120_000, segments=12, files_per_trigger=4)
+#: a drain is two triggers of one 500k-event chunk (8 segments) each, plus
+#: compact(): at this size a trigger's fixed cost (~0.85 s on the reference
+#: box) is a small share
+BULK = dict(n_events=1_000_000, chunk_events=500_000, segments_per_chunk=8)
+#: set-up drains the log's first WARM_SEGMENTS this often, so the scan,
+#: exchange and writer loops are compiled at batch scale before timing
 WARM_DRAINS = 2
+WARM_SEGMENTS = 4
 #: a loop runs for the run's seconds and at least this much work, so a
 #: slow stretch of the host does not also cut a run's sample count
-MIN_DRAINS = 3
+MIN_DRAINS = 1
 MIN_CYCLES = 2
-TRICKLE = dict(chunk=3_000, preload_chunks=8, chunks=30)
 SERVE = dict(chunk=2_000, preload_chunks=12, chunks=24, compact_every=2)
 
 
@@ -95,16 +99,95 @@ class Log:
         n = min(self.spec.n_events, k * self.chunk_events)
         return dataclasses.replace(self.spec, n_events=n)
 
+    def chunks_in(self, n_segments: int) -> int | None:
+        """k when the first n segments are exactly the first k chunks."""
+        total = 0
+        for k, c in enumerate(self.chunks, 1):
+            total += len(c)
+            if total == n_segments:
+                return k
+        return None
 
-def _generate(path: str, spec: changelog.ChangelogSpec, chunk_events: int) -> Log:
-    """Generate once per (spec, chunking) under `path`; later runs reuse it."""
+    def expected(self, k: int) -> pd.DataFrame:
+        """`expected_final_state_chunked` after k chunks, computed once and
+        kept next to the log (it regenerates every event, ~8 s per million)."""
+        path = _expected_path(os.path.dirname(self.segments[0]), k)
+        if not os.path.exists(path):
+            _write_expected(self.spec_at(k), self.chunk_events, path)
+        return pd.read_parquet(path)
+
+
+def _expected_path(log_dir: str, k: int) -> str:
+    return os.path.join(log_dir, f"expected-{k}.parquet")
+
+
+def _write_expected(spec: changelog.ChangelogSpec, chunk_events: int, path: str) -> None:
+    exp = changelog.expected_final_state_chunked(spec, chunk_events=chunk_events)
+    exp.to_parquet(path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
+def _generate_chunk(spec: changelog.ChangelogSpec, i: int, chunk_events: int, part_dir: str) -> None:
+    """Chunk i of `generate_changelog_chunked(spec, chunk_events=...)`: it
+    draws from seed + i, with sequence numbers offset by i * chunk_events.
+    Each segment gets the read oracle's digests of its events beside it."""
+    done = i * chunk_events
+    sub = dataclasses.replace(
+        spec, n_events=min(chunk_events, spec.n_events - done),
+        seed=spec.seed + i, seq_start=spec.seq_start + done,
+    )
+    for seg in changelog.generate_changelog(sub, part_dir).segments:
+        segment_events(seg).to_parquet(seg + DIGESTS)
+
+
+def _in_children(calls: list[tuple]) -> None:
+    """Run each (function, *args) in a forked child process, GEN_WORKERS at
+    a time, and wait for all of them; raise if one fails."""
+    ctx = multiprocessing.get_context("fork")
+    todo, running, failed = list(calls), [], 0
+    while todo or running:
+        while todo and len(running) < GEN_WORKERS:
+            fn, *args = todo.pop(0)
+            running.append(ctx.Process(target=fn, args=tuple(args)))
+            running[-1].start()
+        p = running.pop(0)
+        p.join()
+        failed += p.exitcode != 0
+    if failed:
+        raise RuntimeError(f"{failed} log generation processes failed")
+
+
+def _generate(
+    path: str, spec: changelog.ChangelogSpec, chunk_events: int, oracle_at: tuple[int, ...] = ()
+) -> Log:
+    """Generate once per (spec, chunking) under `path`; later runs reuse it.
+    The chunks, and the generator's oracle for the first k chunks for each
+    k in `oracle_at`, are computed in child processes."""
     manifest = os.path.join(path, "manifest.json")
     if not os.path.exists(manifest):
         shutil.rmtree(path, ignore_errors=True)
-        g = changelog.generate_changelog_chunked(spec, path, chunk_events=chunk_events)
-        per_chunk = len(g.segments) // -(-spec.n_events // chunk_events)
-        names = [os.path.basename(s) for s in g.segments]
-        chunks = [names[i:i + per_chunk] for i in range(0, len(names), per_chunk)]
+        os.makedirs(path)
+        n_chunks = -(-spec.n_events // chunk_events)
+        parts = [os.path.join(path, f"part-{i}") for i in range(n_chunks)]
+        _in_children(
+            [(_write_expected, dataclasses.replace(spec, n_events=min(spec.n_events, k * chunk_events)),
+              chunk_events, _expected_path(path, k)) for k in oracle_at]
+            + [(_generate_chunk, spec, i, chunk_events, part) for i, part in enumerate(parts)]
+        )
+        chunks, segs = [], []
+        for part in parts:
+            names = []
+            for f in sorted(f for f in os.listdir(part) if f.endswith(".parquet")):
+                names.append(f"seg-{len(segs) + len(names):05d}.parquet")
+                for suffix in ("", DIGESTS):
+                    os.replace(os.path.join(part, f + suffix), os.path.join(path, names[-1] + suffix))
+            os.rmdir(part)
+            segs += names
+            chunks.append(names)
+        # a file stream source takes the oldest files first: delivery order
+        t0 = time.time() - len(segs)
+        for j, name in enumerate(segs):
+            os.utime(os.path.join(path, name), (t0 + j, t0 + j))
         with open(manifest + ".tmp", "w") as f:
             json.dump({"chunks": chunks}, f)
         os.replace(manifest + ".tmp", manifest)
@@ -117,45 +200,49 @@ def prepare_inputs(
     workload: str, seed: int, cache: str, traced: bool
 ) -> tuple[dict[str, Log], float]:
     """Every log a run of `workload` needs, and the seconds spent generating
-    (0 when all came from the cache). Keeps the CACHE_KEEP newest logs."""
+    (0 when all came from the cache). Keeps the CACHE_KEEP newest logs of
+    each workload."""
     t0 = time.monotonic()
     logs: dict[str, Log] = {}
 
-    def get(name: str, spec: changelog.ChangelogSpec, chunk_events: int) -> None:
+    def get(name: str, spec: changelog.ChangelogSpec, chunk_events: int, oracle_at=()) -> None:
         key = hashlib.sha1(repr((spec, chunk_events)).encode()).hexdigest()[:12]
-        logs[name] = _generate(os.path.join(cache, f"{name}-s{seed}-{key}"), spec, chunk_events)
+        logs[name] = _generate(os.path.join(cache, f"{name}-s{seed}-{key}"), spec, chunk_events, oracle_at)
 
     if workload == "bulk_replay" or traced:
         # every traced run also replays bulk_replay's log at local[1]
         bulk = changelog.ChangelogSpec(
             n_events=BULK["n_events"],
-            # duplicates add ~2% rows; keep the segment count at BULK["segments"]
-            segment_rows=-(-BULK["n_events"] * 105 // 100 // BULK["segments"]),
+            # duplicates add ~2% rows; keep BULK["segments_per_chunk"]
+            segment_rows=-(-BULK["chunk_events"] * 105 // 100 // BULK["segments_per_chunk"]),
             seed=seed, **BASE_SPEC,
         )
-        get("bulk_replay", bulk, bulk.n_events)
-    if workload in ("trickle_upsert", "serve_under_ingest"):
-        p = TRICKLE if workload == "trickle_upsert" else SERVE
+        # the traced run also drains the first chunk alone
+        get("bulk_replay", bulk, BULK["chunk_events"], oracle_at=(1, 2) if traced else (2,))
+    if workload == "serve_under_ingest":
+        p = SERVE
         spec = changelog.ChangelogSpec(
             n_events=p["chunk"] * (p["preload_chunks"] + p["chunks"]),
             # one segment per chunk: a chunk delivers at most ~1.02 x chunk rows
             segment_rows=2 * p["chunk"],
-            evolve_at_fraction=0.5 if workload == "trickle_upsert" else None,
             seed=seed + 1, **BASE_SPEC,
         )
         get(workload, spec, p["chunk"])
     gen_s = time.monotonic() - t0
-    _evict(cache, CACHE_KEEP, used={os.path.dirname(lg.segments[0]) for lg in logs.values()})
+    for name, lg in logs.items():
+        _evict(cache, name, CACHE_KEEP, used=os.path.dirname(lg.segments[0]))
     return logs, gen_s
 
 
-def _evict(cache: str, keep: int, used: set[str]) -> None:
+def _evict(cache: str, name: str, keep: int, used: str) -> None:
+    """Keep the `keep` newest logs of workload `name`, and `used`."""
+    os.utime(used)
     dirs = sorted(
-        (os.path.join(cache, d) for d in os.listdir(cache)),
+        (os.path.join(cache, d) for d in os.listdir(cache) if d.startswith(f"{name}-s")),
         key=os.path.getmtime, reverse=True,
     )
     for d in dirs[keep:]:
-        if d not in used:
+        if d != used:
             shutil.rmtree(d, ignore_errors=True)
 
 
@@ -174,6 +261,8 @@ class LoopResult:
     #: every (table, chunks) whose final state must match the oracle
     to_verify: list = field(default_factory=list)
     epoch_latency: list[float] = field(default_factory=list)
+    #: (rows, seconds) of every streaming trigger
+    triggers: list[tuple[int, float]] = field(default_factory=list)
     reads: list[dict] = field(default_factory=list)
     events: int = 0
     ingest_wall: float = 0.0
@@ -227,6 +316,15 @@ class Bench:
         d = os.path.join(self.run_dir, f"{name}-{self._n}")
         shutil.rmtree(d, ignore_errors=True)
         return d
+
+    def link_segments(self, name: str, paths: list[str]) -> str:
+        """A fresh directory holding hard links to `paths`: a stream source
+        that delivers only those segments."""
+        src = self.fresh_dir(name)
+        os.makedirs(src)
+        for p in paths:
+            os.link(p, os.path.join(src, os.path.basename(p)))
+        return src
 
     def new_table(self, name: str):
         t = ingest.create_entity_table(self.fresh_dir(name), n_buckets=N_BUCKETS)
@@ -332,30 +430,19 @@ class Bench:
 
     # ------------------------------------------------------------ set-up
 
-    def preload(self, log: Log, chunks: int, schema, stream: bool = False):
+    def preload(self, log: Log, chunks: int, schema):
         """A fresh table loaded copy-on-write with the log's first `chunks`
-        chunks: one merge_into, or with `stream` one run_ingest trigger."""
+        chunks in one merge_into."""
         table, v0 = self.new_table(self.workload)
         paths = [p for c in log.chunks[:chunks] for p in c]
-        if not stream:
-            df = self.spark.read.schema(schema).parquet(*paths)
-            st = merge.merge_into(self.spark, table, df, query_id="preload", epoch=0, mode="cow")
-            return table, {v0: 0, int(st.version): chunks}
-        src = self.fresh_dir("preload")
-        os.makedirs(src)
-        for p in paths:
-            os.link(p, os.path.join(src, os.path.basename(p)))
-        rep = ingest.run_ingest(
-            self.spark, src, table, self.fresh_dir("preload-ckpt"), query_id="preload",
-            max_files_per_trigger=len(paths), mode="cow", schema=schema,
-        )
-        self.triggers(len(rep.epochs))
-        return table, {v0: 0, **{int(st.version): chunks for st in rep.epochs}}
+        df = self.spark.read.schema(schema).parquet(*paths)
+        st = merge.merge_into(self.spark, table, df, query_id="preload", epoch=0, mode="cow")
+        return table, {v0: 0, int(st.version): chunks}
 
     def warm_reads(self, table) -> None:
         """One unchecked read round, so the read paths' first-call costs
         land in set-up, not in the first timed reads."""
-        res = LoopResult(version_chunks={0: 0})
+        res = LoopResult(version_chunks={h["version"]: 0 for h in table.history()})
         v = int(table.stats()["version"])
         self.read_round(res, table, v, self.read_rng("warm"), SqlFrontend(self.spark, {"entity": table}))
 
@@ -366,29 +453,39 @@ class Bench:
 class BulkReplay:
     name = "bulk_replay"
 
-    def warm_up(self, b: Bench) -> None:
-        """Untimed drains of the real backlog, then reads of the last table:
-        the first drains at full batch size are slower (JIT of the scan,
-        exchange and writer loops; the second is still ~10% slower than
-        later ones), so they belong to set-up."""
+    def warm_up(self, b: Bench, state) -> None:
+        """Untimed one-trigger drains of the log's first segments, then
+        reads of the last table: the first large trigger in a process takes
+        about twice as long (JIT of the scan, exchange and writer loops),
+        and the next ones are still ~15% slower, so they belong to set-up.
+        `state` is not used: every drain creates its own table."""
+        log = b.logs[self.name]
         res = LoopResult()
         for _ in range(WARM_DRAINS):
-            self.run_once(b, b.logs[self.name], res, name="warm")
+            self.run_once(b, log, res, name="warm", prefix=WARM_SEGMENTS)
         b.warm_reads(res.table)
 
     def setup(self, b: Bench):
         """Every drain of the loop creates its own table."""
         return b.new_table(self.name)
 
-    def run_once(self, b: Bench, log: Log, res: LoopResult, name: str = "bulk") -> float:
-        """One drain of the whole backlog plus compact(); returns events/s."""
+    def run_once(
+        self, b: Bench, log: Log, res: LoopResult, name: str = "bulk", prefix: int | None = None
+    ) -> float:
+        """One drain of the whole backlog plus compact(); returns events/s.
+        With `prefix`, only the log's first `prefix` segments are drained;
+        the table is checked when they make up whole chunks."""
+        if prefix is None:
+            src, k = os.path.dirname(log.segments[0]), len(log.chunks)
+        else:
+            src, k = b.link_segments(name, log.segments[:prefix]), log.chunks_in(prefix)
         table, v0 = b.new_table(name)
         ckpt = b.fresh_dir(f"{name}-ckpt")
         with b.tracer.span("op.bulk_replay", counters=True):
             t0 = time.perf_counter()
             rep = ingest.run_ingest(
-                b.spark, os.path.dirname(log.segments[0]), table, ckpt,
-                query_id=name, max_files_per_trigger=BULK["files_per_trigger"],
+                b.spark, src, table, ckpt,
+                query_id=name, max_files_per_trigger=BULK["segments_per_chunk"],
                 mode="mor", dedupe_in_batch=False, salt_buckets=None,
             )
             out = b.compact(res, table, None)
@@ -398,14 +495,17 @@ class BulkReplay:
             res.account(s)
         trig = b.triggers(len(rep.epochs))
         res.epoch_latency += [e["duration_ms"].get("triggerExecution", 0) / 1000 for e in trig]
+        res.triggers += [(e["rows"], e["duration_ms"].get("triggerExecution", 0) / 1000) for e in trig]
         res.events += events
         res.ingest_wall += wall
         res.drains.append((events, wall))
         res.table, res.log = table, log
-        res.storage = (dir_bytes(table.root), 1)
-        res.version_chunks = {v0: 0, int(out["version"]): 1}
-        res.chunks_done = 1
-        res.to_verify.append((table, log, 1))
+        if prefix is None:
+            res.storage = (dir_bytes(table.root), k)
+        if k is not None:
+            res.version_chunks = {v0: 0, int(out["version"]): k}
+            res.chunks_done = k
+            res.to_verify.append((table, log, k))
         return events / wall
 
     def loop(self, b: Bench, state) -> LoopResult:
@@ -420,86 +520,15 @@ class BulkReplay:
     readback = True
 
 
-class TrickleUpsert:
-    name = "trickle_upsert"
-
-    def setup(self, b: Bench):
-        return b.preload(b.logs[self.name], TRICKLE["preload_chunks"], ingest.CHANGELOG_SCHEMA)
-
-    def warm_up(self, b: Bench) -> None:
-        b.warm_reads(self.setup(b)[0])
-
-    def loop(self, b: Bench, state) -> LoopResult:
-        """The producer is on schema v2 from the first trickle segment on
-        (the preload was read as v1), so the first trigger evolves the
-        table. One segment is published per trigger and the client waits
-        for its commit before publishing the next."""
-        table, vc = state
-        log = b.logs[self.name]
-        first = TRICKLE["preload_chunks"]
-        res = LoopResult(table=table, log=log, version_chunks=dict(vc), chunks_done=first)
-        live = b.fresh_dir("trickle-live")
-        os.makedirs(live)
-        report, q = ingest.run_ingest(
-            b.spark, live, table, b.fresh_dir("trickle-ckpt"),
-            query_id="trickle", max_files_per_trigger=1, available_now=False,
-            salt_buckets="auto", mode="auto", schema=ingest.CHANGELOG_SCHEMA_V2,
-        )
-        seg_rows = []
-        try:
-            t_end = time.monotonic() + b.seconds
-            i = 0
-            while time.monotonic() < t_end and first + i < len(log.chunks):
-                (src,) = log.chunks[first + i]
-                with b.tracer.span("op.trickle_epoch", counters=True):
-                    t0 = time.perf_counter()
-                    os.link(src, os.path.join(live, os.path.basename(src)))
-                    while len(report.epochs) <= i:
-                        if q.exception() is not None:
-                            raise RuntimeError(f"ingest query failed: {q.exception()}")
-                        if time.perf_counter() - t0 > 120:
-                            raise TimeoutError(f"trickle epoch {i} did not commit in 120 s")
-                        time.sleep(0.002)
-                    lat = time.perf_counter() - t0
-                st = report.epochs[i]
-                res.epoch_latency.append(lat)
-                res.ingest_wall += lat
-                res.events += st.batch_rows
-                res.account(st)
-                seg_rows.append(st.batch_rows)
-                i += 1
-                res.chunks_done = first + i
-                res.version_chunks[int(st.version)] = first + i
-                if i == 1:
-                    res.storage = (dir_bytes(table.root), res.chunks_done)
-        finally:
-            # let the last trigger finish its offset commit and report
-            b.listener.wait_for(len(report.epochs))
-            q.stop()
-            q.awaitTermination(60)
-        b.triggers(len(report.epochs))
-        # one segment per trigger, exactly: the version -> chunks map holds
-        for j, rows in enumerate(seg_rows):
-            want = pq.ParquetFile(log.chunks[first + j][0]).metadata.num_rows
-            if rows != want:
-                res.epoch_failures.append(f"epoch {j} merged {rows} rows, segment has {want}")
-        res.to_verify.append((table, log, res.chunks_done))
-        return res
-
-    readback = True
-
-
 class ServeUnderIngest:
     name = "serve_under_ingest"
 
     def setup(self, b: Bench):
         return b.preload(b.logs[self.name], SERVE["preload_chunks"], ingest.CHANGELOG_SCHEMA)
 
-    def warm_up(self, b: Bench) -> None:
-        """One untimed cycle on a table of its own, preloaded through the
-        streaming path, so the streaming, merge, dirty-read and compaction
-        paths are all warm before timing starts."""
-        state = b.preload(b.logs[self.name], SERVE["preload_chunks"], ingest.CHANGELOG_SCHEMA, stream=True)
+    def warm_up(self, b: Bench, state) -> None:
+        """One untimed cycle on the first set-up's table, so the merge,
+        dirty-read and compaction paths are warm before timing starts."""
         self.loop(b, state, cycles=1)
 
     def loop(self, b: Bench, state, cycles: int | None = None) -> LoopResult:
@@ -552,15 +581,15 @@ class ServeUnderIngest:
     readback = False
 
 
-WORKLOADS = {w.name: w for w in (BulkReplay(), TrickleUpsert(), ServeUnderIngest())}
+WORKLOADS = {w.name: w for w in (BulkReplay(), ServeUnderIngest())}
 
-#: reads of the read-back round that follows bulk_replay and trickle_upsert
-READBACK_ROUNDS = 3
+#: read rounds of the read-back that follows bulk_replay
+READBACK_ROUNDS = 2
 
 
 def readback(b: Bench, res: LoopResult) -> None:
-    """Reads of the table the ingest loop left behind (bulk_replay and
-    trickle_upsert; serve_under_ingest reads inside its loop)."""
+    """Reads of the table the ingest loop left behind (bulk_replay;
+    serve_under_ingest reads inside its loop)."""
     version = max(res.version_chunks)
     fe = SqlFrontend(b.spark, {"entity": res.table})
     rng = b.read_rng("readback")
@@ -582,7 +611,7 @@ def check(b: Bench, res: LoopResult) -> list[str]:
     expected = {}
     for table, log, k in res.to_verify:
         if k not in expected:
-            exp = changelog.expected_final_state_chunked(log.spec_at(k), chunk_events=log.chunk_events)
+            exp = log.expected(k)
             # the read oracle must agree with the generator's own oracle
             mine = oracle.live(k)
             if sorted(zip(mine.index, mine["seq"])) != sorted(
